@@ -6,8 +6,9 @@ trains the coarse quantizer and re-assigns the WHOLE corpus on every
 run -- one full embedding scan per session just to rebuild state that
 never changed.  At a steady 100 TB corpus with a small daily crawl that
 rebuild dwarfs both the append and the search.  This module persists
-the index once, mirroring the MinHash signature store
-(operators/minhash_store.py) artifact discipline exactly:
+the index once, on the same store core as the MinHash signature store
+(:mod:`.store`: flock, manifest-last commit, batch staging, generation
+swap, grace sweep):
 
 * :func:`write_ann_store` -- one :func:`build_ivf_index` pass (sample-
   trained quantizer + one distributed assignment), written as a
@@ -41,15 +42,6 @@ balance (and so recall-at-fixed-probe) degrades -- the manifest tracks
 signature store's: rebuild (or re-run :func:`write_ann_store`) when
 cumulative appends exceed ~10-20% of the corpus.
 
-Crash discipline (shared with the signature store): every mutator holds
-an exclusive flock; relations are written first and the atomic manifest
-replace is the commit; batch dirs rename-then-commit so a crash is
-healed by retrying the same ``batch_id``; a batch id stays committed
-forever (``applied_batches`` OR ``compacted_batches``), so replays
-never double-append; superseded generation/batch dirs survive a grace
-window (readers take no lock) and age out of the next compaction's
-sweep.
-
 Reference parity note: the reference engine has no vector index; this
 extends its surface with the ANN operation a training-data pipeline
 runs daily (SURVEY.md section 2.4 extension family, r11 verdict task 6).
@@ -59,11 +51,11 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .minhash_store import _store_lock, _write_manifest
 from .simsearch import (
     IVFIndex,
     assign_cells,
@@ -71,54 +63,30 @@ from .simsearch import (
     ivf_search_batch,
     valid_vectors,
 )
+from .store import (  # noqa: F401 -- ANN_MANIFEST, read_ann_manifest: public API
+    MANIFEST as ANN_MANIFEST,
+    VERSION,
+    build_once,
+    commit_batch,
+    committed,
+    fold,
+    gen_dir,
+    lock,
+    read_manifest as read_ann_manifest,
+    relation,
+    reset,
+    run_stream,
+    stage_batch,
+    sweep,
+    write_json,
+    write_manifest,
+)
 
-ANN_MANIFEST = "manifest.json"
-ANN_STORE_VERSION = 1
 CENTROIDS = "centroids.json"
 
-#: Superseded dirs survive this long before the next compaction's sweep
-#: removes them -- same reader-grace rationale (and bound) as
-#: minhash_store._SWEEP_GRACE_NS.
-_ANN_SWEEP_GRACE_NS = 3600 * 1_000_000_000
-
-
-def _manifest_path(path: str) -> str:
-    return os.path.join(path, ANN_MANIFEST)
-
-
-def read_ann_manifest(path: str) -> dict:
-    with open(_manifest_path(path)) as f:
-        m = json.load(f)
-    if m.get("version") != ANN_STORE_VERSION:
-        raise ValueError(
-            f"ANN store at {path}: version {m.get('version')} "
-            f"!= supported {ANN_STORE_VERSION}"
-        )
-    return m
-
-
-def _assigned_dir(path: str, m: dict) -> str:
-    gen = m.get("generation", 0)
-    return os.path.join(
-        path, "assigned" if gen == 0 else f"assigned-g{gen}"
-    )
-
-
-def _committed(m: dict) -> set:
-    return set(m.get("applied_batches", [])) | set(
-        m.get("compacted_batches", [])
-    )
-
-
-def _assigned_relation(spark: SparkSession, path: str, m: dict) -> DataFrame:
-    """Current generation's base relation plus every APPLIED batch dir
-    (manifest-listed; an unlisted dir is an uncommitted append and must
-    be invisible)."""
-    paths = [_assigned_dir(path, m)] + [
-        os.path.join(path, "batches", b, "assigned")
-        for b in m.get("applied_batches", [])
-    ]
-    return spark.read.parquet(*paths)
+#: Base relation plus applied batches of the ``assigned`` (id, v, cell)
+#: relation.
+_assigned_relation = partial(relation, name="assigned")
 
 
 def _centroids_file(path: str, m: dict) -> str:
@@ -130,9 +98,13 @@ def _centroids_file(path: str, m: dict) -> str:
     centroid matrix must keep resolving against the OLD assignment --
     cells are renumbered by a recluster, so an unversioned overwrite
     would let stale routing meet fresh cell ids mid-search."""
-    cg = m.get("centroid_generation", 0)
-    return os.path.join(
-        path, CENTROIDS if cg == 0 else f"centroids-g{cg}.json"
+    return gen_dir(path, CENTROIDS, m.get("centroid_generation", 0))
+
+
+def _write_centroids(path: str, gen: int, centers) -> None:
+    write_json(
+        gen_dir(path, CENTROIDS, gen),
+        [[float(x) for x in c] for c in centers],
     )
 
 
@@ -159,23 +131,12 @@ def write_ann_store(
     searches prefilter on cell, so cell-clustered files turn the probe
     into a row-group-skipping scan of ~n_probe/n_clusters of the data.
 
-    Manifest written LAST (a crashed build reads as absent); rebuilding
-    over an existing store removes its manifest and batch dirs first,
-    exactly like the signature store's rebuild."""
-    import re
-    import shutil
-
+    Manifest written last; a rebuild over an existing store resets it
+    first (the protocol: :mod:`.store`)."""
     spark = df.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
-    with _store_lock(path):
-        if os.path.exists(_manifest_path(path)):
-            os.remove(_manifest_path(path))
-        shutil.rmtree(os.path.join(path, "batches"), ignore_errors=True)
-        for entry in os.listdir(path) if os.path.isdir(path) else []:
-            if re.match(r"^assigned-g\d+$", entry):
-                shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
-            elif re.match(r"^centroids-g\d+\.json$", entry):
-                os.remove(os.path.join(path, entry))
+    with lock(path):
+        reset(path, ("assigned", CENTROIDS))
 
         if valid_vectors(df, vec_col, id_col).isEmpty():
             raise ValueError(
@@ -196,17 +157,12 @@ def write_ann_store(
                 os.path.join(path, "assigned")
             ).count()
             dim = len(index.centers[0])
-            tmp = os.path.join(path, f".{CENTROIDS}.tmp")
-            with open(tmp, "w") as f:
-                json.dump(
-                    [[float(x) for x in c] for c in index.centers], f
-                )
-            os.replace(tmp, os.path.join(path, CENTROIDS))
+            _write_centroids(path, 0, index.centers)
         finally:
             index.unpersist()
 
         manifest = {
-            "version": ANN_STORE_VERSION,
+            "version": VERSION,
             "n_clusters": int(n_clusters),
             "dim": int(dim),
             "vec_col": vec_col,
@@ -217,7 +173,7 @@ def write_ann_store(
             "applied_batches": [],
             **(manifest_extra or {}),
         }
-        _write_manifest(path, manifest)
+        write_manifest(path, manifest)
     return manifest
 
 
@@ -232,19 +188,16 @@ def append_ann_batch(
     semantics -- no retrain, no corpus rescan) and fold it in as one
     batch directory, committed by the manifest.
 
-    Same idempotency contract as the signature store's append: build in
-    a temp dir, atomic rename to ``batches/<batch_id>/``, manifest
-    commit (re-read + merge) under the store flock; a retry of a
-    committed id -- applied OR already folded by a compaction -- is a
-    no-op, so pass a stable ``batch_id`` (e.g. the ingest date) for
-    retry safety."""
-    import shutil
+    Same idempotency contract as the signature store's append (the
+    protocol: :mod:`.store`): a retry of a committed id -- applied OR
+    already folded by a compaction -- is a no-op, so pass a stable
+    ``batch_id`` (e.g. the ingest date) for retry safety."""
     import uuid
 
     m = read_ann_manifest(store_path)
     if batch_id is None:
         batch_id = uuid.uuid4().hex[:12]
-    if batch_id in _committed(m):
+    if batch_id in committed(m):
         return m  # already committed: idempotent no-op
     id_col, vec_col = m["id_col"], m["vec_col"]
     new_vecs = valid_vectors(new_df, vec_col, id_col).select(
@@ -268,31 +221,20 @@ def append_ann_batch(
                 f"share vector ids (e.g. {sample}); ids must be disjoint"
             )
 
-    batches_root = os.path.join(store_path, "batches")
-    final_dir = os.path.join(batches_root, batch_id)
-    if not os.path.isdir(final_dir):
-        tmp = os.path.join(batches_root, f".tmp-{uuid.uuid4().hex[:12]}")
-        assign_cells(
+    final_dir = stage_batch(
+        store_path,
+        batch_id,
+        lambda tmp: assign_cells(
             new_vecs, read_centroids(store_path, m), id_col
-        ).write.mode("overwrite").parquet(os.path.join(tmp, "assigned"))
-        try:
-            os.rename(tmp, final_dir)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(final_dir):
-                raise
+        ).write.mode("overwrite").parquet(os.path.join(tmp, "assigned")),
+    )
     # stats from the COMMITTED files (heal-retry books what's on disk)
     n_new = spark.read.parquet(os.path.join(final_dir, "assigned")).count()
-    with _store_lock(store_path):
-        m = read_ann_manifest(store_path)
-        if batch_id in _committed(m):
-            return m  # racing retry/compaction committed first: no-op
-        m["applied_batches"] = list(m.get("applied_batches", [])) + [
-            batch_id
-        ]
+
+    def book(m: dict) -> None:
         m["n_appended"] = int(m.get("n_appended", 0)) + int(n_new)
-        _write_manifest(store_path, m)
-    return m
+
+    return commit_batch(store_path, batch_id, book)
 
 
 def ann_store_search(
@@ -318,30 +260,37 @@ def ann_store_search(
     return ivf_search_batch(index, query_ids, k=k, n_probe=n_probe)
 
 
+def _sweep(store_path: str, m: dict) -> None:
+    sweep(
+        store_path,
+        m,
+        {
+            "assigned": m.get("generation", 0),
+            CENTROIDS: m.get("centroid_generation", 0),
+        },
+    )
+
+
 def compact_ann_store(spark: SparkSession, store_path: str) -> dict:
     """Fold every applied batch into the base relation -- retention for
-    the daily loop, same generation + manifest-last + grace-sweep
-    discipline as the signature store's :func:`compact_store` (see its
-    docstring for the crash/reader analysis; it applies verbatim).
+    the daily loop, the same generation swap and grace sweep as the
+    signature store's :func:`compact_store` (the protocol: :mod:`.store`).
     Purely physical: the folded relation holds exactly base + batches
     (repartitioned by cell), centroids are untouched, and ``n_appended``
     keeps its drift-signal meaning."""
     parallelism = spark.sparkContext.defaultParallelism
-    with _store_lock(store_path):
+    with lock(store_path):
         m = read_ann_manifest(store_path)
-        _sweep_unreferenced_ann(store_path, m)
+        _sweep(store_path, m)
         if not m.get("applied_batches"):
             return m  # nothing to fold: sweep-only pass
         new_gen = m.get("generation", 0) + 1
         rel = _assigned_relation(spark, store_path, m)
         rel.repartition(parallelism, "cell").write.mode(
             "overwrite"
-        ).parquet(os.path.join(store_path, f"assigned-g{new_gen}"))
-        folded = list(m["applied_batches"])
-        m["generation"] = new_gen
-        m["applied_batches"] = []
-        m["compacted_batches"] = m.get("compacted_batches", []) + folded
-        _write_manifest(store_path, m)
+        ).parquet(gen_dir(store_path, "assigned", new_gen))
+        fold(m, new_gen)
+        write_manifest(store_path, m)
     return m
 
 
@@ -447,7 +396,7 @@ def stream_assign_and_append(
     growing source (the call then RETURNS the live StreamingQuery for
     the caller to stop -- the sink body is trigger-agnostic).
     Idempotency: the batch id is the streaming epoch scoped to the
-    checkpoint lineage (minhash_store.stream_batch_id), checked against
+    checkpoint lineage (:func:`.store.stream_batch_id`), checked against
     the manifest's committed set (applied OR compacted), so a replayed
     epoch is a no-op; neighbor sets land one parquet dir per epoch
     (``neighbors_path/<batch_id>/``, mode=overwrite -- exactly-once BY
@@ -455,16 +404,9 @@ def stream_assign_and_append(
     are computed against the store BEFORE the batch joins it:
     intra-batch duplicates are the NEXT epoch's problem by design,
     exactly like the signature store's new-driven mine."""
-    from .minhash_store import stream_batch_id
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, batch_id: str, m: dict) -> None:
         sess = batch_df.sparkSession
-        batch_id = stream_batch_id(checkpoint, epoch_id)
-        m = read_ann_manifest(store_path)
-        if batch_id in _committed(m):
-            return  # replayed epoch: already screened AND appended
         id_col, vec_col = m["id_col"], m["vec_col"]
         qvecs = valid_vectors(batch_df, vec_col, id_col).select(
             F.col(id_col).alias("query_id"),
@@ -482,22 +424,15 @@ def stream_assign_and_append(
         ).parquet(os.path.join(neighbors_path, batch_id))
         append_ann_batch(sess, store_path, batch_df, batch_id=batch_id)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(
-            **(trigger if trigger is not None else {"availableNow": True})
-        )
-        .start()
+    return run_stream(
+        stream_df,
+        store_path,
+        checkpoint,
+        body,
+        trigger,
+        await_seconds,
+        "stream_assign_and_append",
     )
-    if trigger is not None and "availableNow" not in trigger:
-        return q  # continuous run: the caller owns the stop
-    if not q.awaitTermination(await_seconds):
-        q.stop()
-        raise RuntimeError(
-            f"stream_assign_and_append did not terminate in {await_seconds}s"
-        )
-    return None
 
 
 def recluster_ann_store(
@@ -520,17 +455,15 @@ def recluster_ann_store(
     tests/test_ann_store.py::test_recluster_equals_fresh_build).  The
     source corpus is never touched.
 
-    Commit discipline is the shared one: new assignment written as the
-    next generation, new centroid matrix as the next
+    Commit discipline is the shared one (:mod:`.store`): new assignment
+    written as the next generation, new centroid matrix as the next
     ``centroids-g<N>.json`` (readers holding the old manifest keep
     routing old centroids against the old generation), manifest-last
-    swap under the store flock; ``n_vecs`` absorbs ``n_appended``,
-    which resets to 0, and superseded dirs age out of the next
-    mutator's grace sweep."""
+    swap; ``n_vecs`` absorbs ``n_appended``, which resets to 0."""
     parallelism = spark.sparkContext.defaultParallelism
-    with _store_lock(store_path):
+    with lock(store_path):
         m = read_ann_manifest(store_path)
-        _sweep_unreferenced_ann(store_path, m)
+        _sweep(store_path, m)
         new_gen = m.get("generation", 0) + 1
         new_cg = m.get("centroid_generation", 0) + 1
         id_col = m["id_col"]
@@ -547,83 +480,22 @@ def recluster_ann_store(
         try:
             index.assigned.repartition(parallelism, "cell").write.mode(
                 "overwrite"
-            ).parquet(os.path.join(store_path, f"assigned-g{new_gen}"))
-            tmp = os.path.join(store_path, f".centroids-g{new_cg}.tmp")
-            with open(tmp, "w") as f:
-                json.dump(
-                    [[float(x) for x in c] for c in index.centers], f
-                )
-            os.replace(
-                tmp, os.path.join(store_path, f"centroids-g{new_cg}.json")
-            )
+            ).parquet(gen_dir(store_path, "assigned", new_gen))
+            _write_centroids(store_path, new_cg, index.centers)
         finally:
             index.unpersist()
 
-        folded = list(m.get("applied_batches", []))
-        m["generation"] = new_gen
-        m["centroid_generation"] = new_cg
-        m["n_clusters"] = k_cells
-        m["applied_batches"] = []
-        m["compacted_batches"] = m.get("compacted_batches", []) + folded
+        fold(m, new_gen, centroid_generation=new_cg, n_clusters=k_cells)
         m["n_vecs"] = int(m["n_vecs"]) + int(m.get("n_appended", 0))
         m["n_appended"] = 0
-        _write_manifest(store_path, m)
+        write_manifest(store_path, m)
     return m
-
-
-def _sweep_unreferenced_ann(store_path: str, m: dict) -> None:
-    """Grace-window sweep of unreferenced dirs (superseded generations,
-    folded batch dirs) -- minhash_store._sweep_unreferenced's contract
-    for the ANN layout."""
-    import re
-    import shutil
-    import time
-
-    now_ns = time.time_ns()
-
-    def _old(d: str) -> bool:
-        try:
-            return now_ns - os.stat(d).st_mtime_ns > _ANN_SWEEP_GRACE_NS
-        except OSError:
-            return False
-
-    current = os.path.basename(_assigned_dir(store_path, m))
-    current_centroids = os.path.basename(_centroids_file(store_path, m))
-    try:
-        entries = os.listdir(store_path)
-    except OSError:
-        return
-    for entry in entries:
-        d = os.path.join(store_path, entry)
-        if (
-            re.match(r"^assigned(-g\d+)?$", entry)
-            and entry != current
-            and _old(d)
-        ):
-            shutil.rmtree(d, ignore_errors=True)
-        elif (
-            re.match(r"^centroids(-g\d+)?\.json$", entry)
-            and entry != current_centroids
-            and _old(d)
-        ):
-            try:
-                os.remove(d)
-            except OSError:
-                pass
-    for b in m.get("compacted_batches", []):
-        d = os.path.join(store_path, "batches", b)
-        if os.path.isdir(d) and _old(d):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 # -- registry -----------------------------------------------------------------
 
 from ..queries import register, t  # noqa: E402
-from .minhash_store import (  # noqa: E402
-    _corpus_fingerprint,
-    _prune_stale_stores,
-    footer_row_count,
-)
+from .minhash_store import footer_row_count  # noqa: E402
 from .simsearch import (  # noqa: E402
     ANN_QUERY_IDS,
     DIM,
@@ -648,16 +520,16 @@ _DUCK_PANEL_SQL = (
 )
 
 
-def _ann_store_path(sf_dir: str, label: str, fp: str) -> str:
-    """Content-addressed cache path (the signature-store convention):
-    the corpus fingerprint names the directory, so regenerated testdata
-    builds fresh instead of mutating under a concurrent reader."""
-    import hashlib
-
-    key = hashlib.md5(
-        f"{sf_dir}|ann|{label}|v{ANN_STORE_VERSION}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/conecta_spark_annstore", key, fp)
+def _cached_ann_store(sf_dir: str, label: str, build, ready) -> str:
+    """The registry's ANN store under the content-addressed cache
+    (:func:`.store.build_once`), keyed on (sf_dir, label)."""
+    return build_once(
+        "/tmp/conecta_spark_annstore",
+        f"{sf_dir}|ann|{label}|v{VERSION}",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        build,
+        ready,
+    )
 
 
 @register(
@@ -683,38 +555,21 @@ def x79_ann_store(spark, sf_dir) -> DataFrame:
         )
     n = footer_row_count(spark, sf_dir, "embeddings")
     cut = (4 * n) // 5
-    fp = _corpus_fingerprint(sf_dir, table="embeddings")
-    path = _ann_store_path(sf_dir, f"{n}|{cut}", fp)
 
-    def _ready() -> bool:
-        try:
-            mm = read_ann_manifest(path)
-            return (
-                mm.get("corpus_fingerprint") == fp
-                and "day-001" in _committed(mm)
-            )
-        except (OSError, ValueError):
-            return False
+    def build(path: str, extra: dict) -> None:
+        write_ann_store(
+            emb.where(F.col("vec_id") < cut), path, manifest_extra=extra
+        )
+        append_ann_batch(
+            spark,
+            path,
+            emb.where(F.col("vec_id") >= cut),
+            batch_id="day-001",
+        )
 
-    if not _ready():
-        import fcntl
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, ".build.lock"), "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            if not _ready():
-                write_ann_store(
-                    emb.where(F.col("vec_id") < cut),
-                    path,
-                    manifest_extra={"corpus_fingerprint": fp},
-                )
-                append_ann_batch(
-                    spark,
-                    path,
-                    emb.where(F.col("vec_id") >= cut),
-                    batch_id="day-001",
-                )
-        _prune_stale_stores(path)
+    path = _cached_ann_store(
+        sf_dir, f"{n}|{cut}", build, lambda m: "day-001" in committed(m)
+    )
     ann: dict = {}
     for r in (
         ann_store_search(spark, path, ANN_QUERY_IDS, k=10, n_probe=8)
@@ -752,48 +607,32 @@ def x81_reclustered_ann(spark, sf_dir) -> DataFrame:
         )
     n = footer_row_count(spark, sf_dir, "embeddings")
     c1, c2 = (3 * n) // 5, (4 * n) // 5
-    fp = _corpus_fingerprint(sf_dir, table="embeddings")
-    path = _ann_store_path(sf_dir, f"recluster|{n}|{c1}|{c2}", fp)
 
-    def _ready() -> bool:
-        try:
-            mm = read_ann_manifest(path)
-            return (
-                mm.get("corpus_fingerprint") == fp
-                and mm.get("centroid_generation", 0) >= 1
-                and "day-002" in _committed(mm)
-            )
-        except (OSError, ValueError):
-            return False
+    def build(path: str, extra: dict) -> None:
+        write_ann_store(
+            emb.where(F.col("vec_id") < c1), path, manifest_extra=extra
+        )
+        append_ann_batch(
+            spark,
+            path,
+            emb.where((F.col("vec_id") >= c1) & (F.col("vec_id") < c2)),
+            batch_id="day-001",
+        )
+        append_ann_batch(
+            spark,
+            path,
+            emb.where(F.col("vec_id") >= c2),
+            batch_id="day-002",
+        )
+        recluster_ann_store(spark, path)
 
-    if not _ready():
-        import fcntl
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, ".build.lock"), "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            if not _ready():
-                write_ann_store(
-                    emb.where(F.col("vec_id") < c1),
-                    path,
-                    manifest_extra={"corpus_fingerprint": fp},
-                )
-                append_ann_batch(
-                    spark,
-                    path,
-                    emb.where(
-                        (F.col("vec_id") >= c1) & (F.col("vec_id") < c2)
-                    ),
-                    batch_id="day-001",
-                )
-                append_ann_batch(
-                    spark,
-                    path,
-                    emb.where(F.col("vec_id") >= c2),
-                    batch_id="day-002",
-                )
-                recluster_ann_store(spark, path)
-        _prune_stale_stores(path)
+    path = _cached_ann_store(
+        sf_dir,
+        f"recluster|{n}|{c1}|{c2}",
+        build,
+        lambda m: m.get("centroid_generation", 0) >= 1
+        and "day-002" in committed(m),
+    )
     ann: dict = {}
     for r in (
         ann_store_search(spark, path, ANN_QUERY_IDS, k=10, n_probe=8)

@@ -34,21 +34,20 @@ tracks ``n_docs`` at build vs appended).  The DuckDB oracle twin
 (``_duck_mh_sigs(df_pred=...)``) mirrors frozen-DF exactly, so the
 semantics are pinned cross-engine, not hand-waved.
 
-Store layout (all paths under ``path/``)::
+Store layout (under ``path/``; manifest, batch dirs, generation naming
+and the commit protocol are the store core's, :mod:`.store`)::
 
-    manifest.json   params (k, num_perms, bands, max_df), n_docs at
-                    build, n_appended, applied_batches, generation,
-                    schema version
     banded/         (id, band_idx, band_key) parquet, repartitioned by
                     (band_idx, band_key) so candidate-join buckets are
-                    file-clustered; named banded-g<N> after N compactions
+                    file-clustered
     shingles/       (id, sh array<bigint>) parquet, sorted by id within
                     partitions so the verify join's row-group stats
-                    enable runtime skipping on selective candidates;
-                    named shingles-g<N> after N compactions
+                    enable runtime skipping on selective candidates
     common/         (h bigint) -- the frozen boilerplate shingle set
-    batches/<id>/   per-append shingles/banded dirs, unioned on read
-                    until a compaction folds them into the base
+
+The manifest carries the params (k, num_perms, bands, max_df), n_docs
+at build, n_appended, tot_hashes, and the ``generation`` (banded,
+shingles) and ``common_generation`` counters.
 
 Reference parity note: the reference engine has no incremental mining;
 this extends its dedup surface with the operation a training-data
@@ -57,7 +56,6 @@ pipeline actually runs daily (SURVEY.md section 2.4 extension family).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,139 +73,34 @@ from .dedup import (
     hashed_shingles,
     minhash_signatures,
 )
+from .store import (  # noqa: F401 -- MANIFEST, read_manifest, stream_batch_id: public API
+    MANIFEST,
+    VERSION,
+    build_once,
+    commit_batch,
+    committed,
+    fold,
+    gen_dir,
+    link_fold,
+    lock,
+    part_files,
+    read_manifest,
+    relation,
+    reset,
+    run_stream,
+    stage_batch,
+    stream_batch_id,
+    sweep,
+    write_manifest,
+)
 
 from ..queries import register, t
 
-MANIFEST = "manifest.json"
-STORE_VERSION = 1
-LOCKFILE = ".store.lock"
-
-
-def _manifest_path(path: str) -> str:
-    return os.path.join(path, MANIFEST)
-
-
-from contextlib import contextmanager  # noqa: E402
-
-
-@contextmanager
-def _store_lock(path: str):
-    """Exclusive flock serializing store MUTATORS (build, append,
-    compact) on one store directory.  The manifest commit is a
-    read-modify-write of ``applied_batches``: two unserialized appends
-    would each read the old list and the last writer would silently drop
-    the other's committed batch forever.  Readers don't take the lock --
-    appends add NEW batch dirs and compaction writes NEW generation
-    dirs, so a reader's manifest snapshot keeps pointing at intact
-    files.  The one in-place mutator is a REBUILD
-    (:func:`write_signature_store` over an existing store), which can
-    still race a reader mid-scan; the registry entries avoid that
-    entirely by content-addressing the store path on the corpus
-    fingerprint (a changed corpus builds into a fresh directory), and
-    direct API users rebuilding a shared path owe their readers the
-    same discipline."""
-    import fcntl
-
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, LOCKFILE), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        yield
-
-
-def _write_manifest(path: str, m: dict) -> None:
-    """Atomic manifest replace (tmp + os.replace): the manifest is the
-    store's commit record -- a torn write must never be readable."""
-    import uuid
-
-    tmp = os.path.join(path, f".{MANIFEST}.tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(m, f, indent=1)
-    os.replace(tmp, _manifest_path(path))
-
-
-def _rel_dir(path: str, m: dict, name: str) -> str:
-    """Base relation directory for the manifest's current generation:
-    ``name`` for generation 0 (the layout every pre-compaction store
-    has), ``name-g<N>`` after N compactions.  Generation-suffixed names
-    let :func:`compact_store` write the folded relation NEXT TO the old
-    one and commit by manifest swap -- os.replace can't atomically swap
-    non-empty directories, but a manifest that names its generation
-    can."""
-    gen = m.get("generation", 0)
-    return os.path.join(path, name if gen == 0 else f"{name}-g{gen}")
-
-
 def _common_dir(path: str, m: dict) -> str:
-    """The frozen-DF boilerplate relation for the manifest's current
-    ``common_generation``: ``common`` at build time, ``common-g<N>``
-    after N refreezes (:func:`refreeze_common` follows the same
-    write-next-to + manifest-swap discipline as compaction; its own
-    counter because compactions bump ``generation`` without touching the
-    DF table)."""
-    cg = m.get("common_generation", 0)
-    return os.path.join(path, "common" if cg == 0 else f"common-g{cg}")
-
-
-def _committed_batches(m: dict) -> set:
-    """Every batch id the store has EVER committed: currently-applied
-    dirs plus batches a compaction already folded into the base.  Both
-    replay guards (append heal-retry, streaming epoch replay) must check
-    this set, not ``applied_batches`` alone -- after a compaction moves
-    a batch to ``compacted_batches`` and sweeps its dir, a replayed
-    epoch with the same id would otherwise re-append the same docs as
-    new rows (duplicate pair emissions, double-counted ``n_appended``),
-    silently breaking the exactly-once contract."""
-    return set(m.get("applied_batches", [])) | set(
-        m.get("compacted_batches", [])
-    )
-
-
-def _link_fold(dst: str, src_dirs: list) -> None:
-    """Fold parquet relations at the FILE level: hard-link every part
-    file of ``src_dirs`` into a fresh ``dst`` (copy on filesystems that
-    refuse the link).  Zero data pass -- the union of the sources' rows
-    IS the folded relation (ids are disjoint by append validation), and
-    each source keeps the locality its own write gave it.  ``dst`` is
-    cleared first so a crashed earlier fold into the same generation
-    can't leave stale extras; until the manifest swap commits it, the
-    dir is unreferenced and invisible to readers."""
-    import shutil
-
-    shutil.rmtree(dst, ignore_errors=True)
-    os.makedirs(dst)
-    for i, src in enumerate(src_dirs):
-        for f in sorted(os.listdir(src)):
-            if not f.endswith(".parquet"):
-                continue
-            target = os.path.join(dst, f"f{i:04d}-{f}")
-            try:
-                os.link(os.path.join(src, f), target)
-            except OSError:
-                shutil.copy2(os.path.join(src, f), target)
-
-
-def _store_relation(spark: SparkSession, path: str, m: dict, name: str):
-    """Read a store relation: the current generation's base parquet plus
-    every APPLIED batch directory (manifest-listed -- a batch dir that
-    exists but is not in ``applied_batches`` is an uncommitted append
-    and must be invisible, exactly like data written before a crashed
-    manifest update)."""
-    paths = [_rel_dir(path, m, name)] + [
-        os.path.join(path, "batches", b, name)
-        for b in m.get("applied_batches", [])
-    ]
-    return spark.read.parquet(*paths)
-
-
-def read_manifest(path: str) -> dict:
-    with open(_manifest_path(path)) as f:
-        m = json.load(f)
-    if m.get("version") != STORE_VERSION:
-        raise ValueError(
-            f"signature store at {path}: version {m.get('version')} "
-            f"!= supported {STORE_VERSION}"
-        )
-    return m
+    """The frozen-DF boilerplate relation: ``common`` at build time,
+    ``common-g<N>`` after N refreezes (its own counter, because
+    compactions bump ``generation`` without touching the DF table)."""
+    return gen_dir(path, "common", m.get("common_generation", 0))
 
 
 def write_signature_store(
@@ -225,34 +118,13 @@ def write_signature_store(
     and return the manifest.  One pass of the mining front-half -- the
     same relations the inline miner persists in memory, written durable.
 
-    The manifest is written LAST, so a crashed build leaves no manifest
-    and the store reads as absent rather than half-built.  Rebuilding
-    over an EXISTING store first removes its manifest (the old manifest
-    must not vouch for half-overwritten data) and its batch dirs (stale
-    appends signed against the old corpus's DF table)."""
-    import shutil
-
+    Manifest written last; a rebuild over an existing store resets it
+    first (the protocol: :mod:`.store`)."""
     spark = df.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
 
-    # serialized with appends/compactions on the same path: a rebuild
-    # racing an in-flight append would otherwise interleave overwrite
-    # writes with the append's manifest commit
-    with _store_lock(path):
-        if os.path.exists(_manifest_path(path)):
-            os.remove(_manifest_path(path))
-        shutil.rmtree(os.path.join(path, "batches"), ignore_errors=True)
-        # a rebuild writes generation-0 dir names; generation-suffixed
-        # relations left by a prior compaction would otherwise orphan
-        # (never referenced again, never swept -- compaction's sweep
-        # only runs on stores WITH batches to fold)
-        import re as _re
-
-        for entry in os.listdir(path) if os.path.isdir(path) else []:
-            if _re.match(r"^(shingles|banded|common)-g\d+$", entry):
-                shutil.rmtree(
-                    os.path.join(path, entry), ignore_errors=True
-                )
+    with lock(path):
+        reset(path, ("shingles", "banded", "common"))
 
         hashed = hashed_shingles(df, k, text_col, id_col)
         hashed.repartition(parallelism, id_col).sortWithinPartitions(
@@ -288,7 +160,7 @@ def write_signature_store(
         ).parquet(os.path.join(path, "banded"))
 
         manifest = {
-            "version": STORE_VERSION,
+            "version": VERSION,
             "k": k,
             "num_perms": num_perms,
             "bands": bands,
@@ -301,7 +173,7 @@ def write_signature_store(
             "applied_batches": [],
             **(manifest_extra or {}),
         }
-        _write_manifest(path, manifest)
+        write_manifest(path, manifest)
     return manifest
 
 
@@ -362,8 +234,8 @@ def incremental_pairs_stored(
 
     m = read_manifest(store_path)
     id_col = m["id_col"]
-    stored_banded = _store_relation(spark, store_path, m, "banded")
-    stored_sh = _store_relation(spark, store_path, m, "shingles")
+    stored_banded = relation(spark, store_path, m, "banded")
+    stored_sh = relation(spark, store_path, m, "shingles")
     common = spark.read.parquet(_common_dir(store_path, m))
 
     if validate_ids:
@@ -436,20 +308,12 @@ def append_batch(
     rebuild the store when ``n_appended`` approaches ~10-20% of
     ``n_docs``.
 
-    Crash-safe and idempotent (the write_signature_store manifest-last
-    discipline, extended to appends): the batch is built in a temp dir,
-    atomically renamed to ``batches/<batch_id>/``, and only then listed
-    in the manifest's ``applied_batches`` (readers ignore unlisted batch
-    dirs).  A crash mid-build leaves an invisible temp dir; a crash
-    between rename and manifest is healed by retrying with the SAME
-    ``batch_id`` -- the completed dir is adopted and just committed; a
-    retry of an already-applied id is a no-op.  Callers wanting retry
-    safety must therefore pass a stable ``batch_id`` (e.g. the ingest
-    date); the default is a fresh UUID (no retry identity).  The
-    manifest commit itself re-reads and merges ``applied_batches`` under
-    the store's exclusive flock, so two concurrent appends never drop
-    each other's committed batch in a last-writer-wins overwrite."""
-    import shutil
+    Crash-safe and idempotent by ``batch_id`` (stage, rename, commit;
+    the protocol: :mod:`.store`): a retry with the SAME id heals a crash
+    and a retry of a committed id -- applied OR folded by a compaction --
+    is a no-op.  Callers wanting retry safety must therefore pass a
+    stable ``batch_id`` (e.g. the ingest date); the default is a fresh
+    UUID (no retry identity)."""
     import uuid
 
     from pyspark import StorageLevel
@@ -457,15 +321,11 @@ def append_batch(
     m = read_manifest(store_path)
     if batch_id is None:
         batch_id = uuid.uuid4().hex[:12]
-    if batch_id in _committed_batches(m):
-        return m  # already committed (applied OR since folded by a
-        # compaction): idempotent no-op -- re-appending a compacted
-        # batch would duplicate its docs in the store
+    if batch_id in committed(m):
+        return m  # re-appending a compacted batch would duplicate its docs
     id_col = m["id_col"]
-    batches_root = os.path.join(store_path, "batches")
-    final_dir = os.path.join(batches_root, batch_id)
-    if not os.path.isdir(final_dir):
-        tmp = os.path.join(batches_root, f".tmp-{uuid.uuid4().hex[:12]}")
+
+    def write(tmp: str) -> None:
         hashed_new = hashed_shingles(
             new_df, m["k"], m["text_col"], id_col
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -479,12 +339,8 @@ def append_batch(
             ).write.mode("overwrite").parquet(os.path.join(tmp, "banded"))
         finally:
             hashed_new.unpersist()
-        try:
-            os.rename(tmp, final_dir)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(final_dir):
-                raise
+
+    final_dir = stage_batch(store_path, batch_id, write)
     # stats from the COMMITTED files, so a heal-retry (dir present,
     # manifest behind) books exactly what the store actually holds
     stats = (
@@ -494,42 +350,13 @@ def append_batch(
         )
         .first()
     )
-    # the manifest commit is a read-modify-write of applied_batches:
-    # re-read and merge UNDER the store lock, so a concurrent append (or
-    # a compaction that just folded earlier batches) committed between
-    # our opening read and now is never silently dropped by a stale
-    # last-writer-wins overwrite
-    with _store_lock(store_path):
-        m = read_manifest(store_path)
-        if batch_id in _committed_batches(m):
-            return m  # a racing retry committed first (or a compaction
-            # folded this id between our opening read and now): no-op
-        m["applied_batches"] = list(m.get("applied_batches", [])) + [
-            batch_id
-        ]
+
+    def book(m: dict) -> None:
         m["n_appended"] = int(m["n_appended"]) + int(stats["n"])
         # keep the verify-broadcast size gate honest as the store grows
         m["tot_hashes"] = int(m["tot_hashes"]) + int(stats["tot"] or 0)
-        _write_manifest(store_path, m)
-    return m
 
-
-def stream_batch_id(checkpoint: str, epoch_id: int) -> str:
-    """Store batch id for a streaming micro-batch: the epoch id scoped
-    by a stable hash of the checkpoint path.  Epoch ids are unique only
-    per checkpoint LINEAGE -- a new stream (fresh checkpoint) over the
-    same store restarts at epoch 0, and an unscoped ``epoch-0`` would
-    collide with a previously applied id and be silently skipped as a
-    replay, dropping genuinely new data.  Hashing the checkpoint path
-    (not the query runId, which changes on every restart) keeps the id
-    STABLE across restarts of the same checkpoint, so crash-replay
-    idempotency still holds."""
-    import hashlib
-
-    lineage = hashlib.md5(
-        os.path.abspath(checkpoint).encode()
-    ).hexdigest()[:8]
-    return f"epoch-{lineage}-{epoch_id:09d}"
+    return commit_batch(store_path, batch_id, book)
 
 
 def stream_mine_and_append(
@@ -569,13 +396,8 @@ def stream_mine_and_append(
     exactly-once BY PATH, the store append exactly-once by manifest.
     """
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, batch_id: str, m: dict) -> None:
         sess = batch_df.sparkSession
-        batch_id = stream_batch_id(checkpoint, epoch_id)
-        if batch_id in _committed_batches(read_manifest(store_path)):
-            return  # replayed epoch: already mined AND appended
         pairs = incremental_pairs_stored(
             sess,
             store_path,
@@ -588,85 +410,36 @@ def stream_mine_and_append(
         )
         append_batch(sess, store_path, batch_df, batch_id=batch_id)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
+    return run_stream(
+        stream_df,
+        store_path,
+        checkpoint,
+        body,
+        trigger,
+        await_seconds,
+        "stream_mine_and_append",
     )
-    if trigger is not None and "availableNow" not in trigger:
-        return q  # continuous run: the caller owns the stop
-    if not q.awaitTermination(await_seconds):
-        q.stop()
-        raise RuntimeError(
-            f"stream_mine_and_append did not terminate in {await_seconds}s"
-        )
-    return None
 
 
-#: Superseded generation dirs and folded batch dirs survive this long
-#: after a compaction/refreeze before the NEXT sweep removes them.
-#: Mutators serialize on the store flock but readers deliberately take
-#: no lock (:func:`_store_lock`): a mine that loaded a pre-compaction
-#: manifest may scan old-generation parquet for minutes, and an
-#: immediate rmtree would yank files mid-job (FileNotFoundException).
-#: One hour bounds any plausible in-flight mine -- the same bound as
-#: :data:`_STALE_STORE_GRACE_NS` for superseded sibling stores.
-_SWEEP_GRACE_NS = 3600 * 1_000_000_000
-
-
-def _sweep_unreferenced(store_path: str, m: dict) -> None:
-    """Remove store dirs no manifest references anymore, once they are
-    older than :data:`_SWEEP_GRACE_NS`: generation-suffixed relation
-    dirs of non-current generations, and batch dirs whose ids a
-    compaction already folded (listed in ``compacted_batches`` -- batch
-    dirs in NEITHER list are left alone: they are crash garbage or an
-    in-flight append between its rename and its manifest commit, and
-    deleting those would break append's heal-retry).  Grace is judged on
-    the dir mtime, which a superseded dir stops accumulating the moment
-    it is superseded.  Runs under the store flock (callers hold it)."""
-    import re
-    import shutil
-    import time
-
-    now_ns = time.time_ns()
-
-    def _old(d: str) -> bool:
-        try:
-            return now_ns - os.stat(d).st_mtime_ns > _SWEEP_GRACE_NS
-        except OSError:
-            return False
-
-    current = {
-        os.path.basename(_rel_dir(store_path, m, "shingles")),
-        os.path.basename(_rel_dir(store_path, m, "banded")),
-        os.path.basename(_common_dir(store_path, m)),
-    }
-    gen_re = re.compile(r"^(shingles|banded|common)(-g\d+)?$")
-    try:
-        entries = os.listdir(store_path)
-    except OSError:
-        return
-    for entry in entries:
-        d = os.path.join(store_path, entry)
-        if gen_re.match(entry) and entry not in current and _old(d):
-            shutil.rmtree(d, ignore_errors=True)
-    for b in m.get("compacted_batches", []):
-        d = os.path.join(store_path, "batches", b)
-        if os.path.isdir(d) and _old(d):
-            shutil.rmtree(d, ignore_errors=True)
+def _sweep(store_path: str, m: dict) -> None:
+    g = m.get("generation", 0)
+    sweep(
+        store_path,
+        m,
+        {"shingles": g, "banded": g, "common": m.get("common_generation", 0)},
+    )
 
 
 def compact_store(spark: SparkSession, store_path: str) -> dict:
     """Fold every applied batch into the base relations -- the retention
     half of the daily-ingest contract.  :func:`append_batch` accumulates
-    one directory per batch and :func:`_store_relation` unions them all
-    on every read, so after months of daily appends a mine pays N-dir
-    scan overhead (file listing, footer reads, small-file parquet scans)
-    that compaction folds back to one well-partitioned relation per
-    store.  Run it on the same cadence you'd vacuum any LSM-shaped
-    store -- e.g. every ~10 appends (the SF10 rung records read-side
-    wall flat after compaction at exactly that point).
+    one directory per batch and every read unions them all, so after
+    months of daily appends a mine pays N-dir scan overhead (file
+    listing, footer reads, small-file parquet scans) that compaction
+    folds back to one well-partitioned relation per store.  Run it on
+    the same cadence you'd vacuum any LSM-shaped store -- e.g. every ~10
+    appends (the SF10 rung records read-side wall flat after compaction
+    at exactly that point).
 
     Semantics are purely physical: the folded relations hold exactly the
     union of base + applied batches (pinned by the equality test), the
@@ -675,53 +448,32 @@ def compact_store(spark: SparkSession, store_path: str) -> dict:
     rebuild-the-store drift signal must survive compaction, so
     compaction does NOT fold ``n_appended`` into ``n_docs``).
 
-    Same crash discipline as build/append, extended with generations:
-    the folded relations are written to ``<name>-g<gen+1>`` NEXT TO the
-    live ones, and the manifest -- rewritten last, atomically -- is what
-    flips readers to the new generation and empties
-    ``applied_batches``.  A crash before the manifest write leaves
-    orphan next-gen dirs (swept by a later compaction once aged); a
-    crash after it leaves superseded old-gen/batch dirs (ditto); neither
-    is ever readable as data.  Superseded dirs are NOT removed at commit
-    time: readers take no lock, so a mine that loaded the pre-compaction
-    manifest may still be scanning them -- the sweep
-    (:func:`_sweep_unreferenced`) runs at the start of every compaction
-    and removes only dirs no manifest references that are older than
-    :data:`_SWEEP_GRACE_NS`.  Calling ``compact_store`` on a store with
-    no applied batches is therefore useful as a sweep-only pass.  The
-    whole fold runs under the store's exclusive flock, serialized with
-    builds and with append commits -- an append racing a compaction
-    either commits first (its batch is folded) or re-reads the
-    post-compaction manifest under the lock and lands in the fresh
-    ``applied_batches``."""
+    Generation swap, reader grace and sweep: the protocol in
+    :mod:`.store` (with no applied batches, a sweep-only pass)."""
     parallelism = spark.sparkContext.defaultParallelism
-    with _store_lock(store_path):
+    with lock(store_path):
         m = read_manifest(store_path)
-        _sweep_unreferenced(store_path, m)
+        _sweep(store_path, m)
         if not m.get("applied_batches"):
             return m  # nothing to fold: sweep-only pass
-        gen = m.get("generation", 0)
-        new_gen = gen + 1
+        new_gen = m.get("generation", 0) + 1
         id_col = m["id_col"]
 
-        sh = _store_relation(spark, store_path, m, "shingles")
+        sh = relation(spark, store_path, m, "shingles")
         sh.repartition(parallelism, id_col).sortWithinPartitions(
             id_col
         ).write.mode("overwrite").parquet(
-            os.path.join(store_path, f"shingles-g{new_gen}")
+            gen_dir(store_path, "shingles", new_gen)
         )
-        banded = _store_relation(spark, store_path, m, "banded")
+        banded = relation(spark, store_path, m, "banded")
         banded.repartition(
             parallelism, "band_idx", "band_key"
         ).write.mode("overwrite").parquet(
-            os.path.join(store_path, f"banded-g{new_gen}")
+            gen_dir(store_path, "banded", new_gen)
         )
 
-        folded = list(m["applied_batches"])
-        m["generation"] = new_gen
-        m["applied_batches"] = []
-        m["compacted_batches"] = m.get("compacted_batches", []) + folded
-        _write_manifest(store_path, m)
+        fold(m, new_gen)
+        write_manifest(store_path, m)
     return m
 
 
@@ -740,36 +492,35 @@ def refreeze_common(spark: SparkSession, store_path: str) -> dict:
 
     A refreeze is a LOGICAL fold plus a DF recompute: the banded
     relation embeds the boilerplate filter, so a new ``common`` forces
-    one re-band -- written as the next generation, committed by the same
-    manifest-last swap under the store flock.  The shingle fold is done
-    at the FILE level (:func:`_link_fold`: every part file of the base
-    and batch shingle dirs hard-linked into the new generation dir) --
-    zero data pass, because the union of those files IS the folded
-    relation (append validation keeps ids disjoint) and each source dir
-    keeps the locality its own write gave it; physical re-layout stays
-    :func:`compact_store`'s job.  ``n_docs``/``tot_hashes`` come from
-    the manifest (append_batch books exact deltas from the committed
-    files), so the only data the refreeze reads is the one cached
-    shingle pass feeding the DF aggregation and the re-band.  After it,
-    the store is byte-equivalent in mining behavior to one freshly
-    built over the full current corpus (pinned by
-    test_refreeze_equals_fresh_build): ``n_docs`` becomes the full
-    count, ``n_appended`` resets to 0, and the drift clock restarts.
-    Superseded dirs age out via the compaction sweep's grace window."""
+    one re-band -- written as the next generation, committed by the
+    store's manifest swap (protocol: :mod:`.store`).  The shingle fold
+    is done at the FILE level (:func:`.store.link_fold`: every part file
+    of the base and batch shingle dirs hard-linked into the new
+    generation dir) -- zero data pass, because the union of those files
+    IS the folded relation (append validation keeps ids disjoint) and
+    each source dir keeps the locality its own write gave it; physical
+    re-layout stays :func:`compact_store`'s job.  ``n_docs``/
+    ``tot_hashes`` come from the manifest (append_batch books exact
+    deltas from the committed files), so the only data the refreeze
+    reads is the one cached shingle pass feeding the DF aggregation and
+    the re-band.  After it, the store is byte-equivalent in mining
+    behavior to one freshly built over the full current corpus (pinned
+    by test_refreeze_equals_fresh_build): ``n_docs`` becomes the full
+    count, ``n_appended`` resets to 0, and the drift clock restarts."""
     from pyspark import StorageLevel
 
     parallelism = spark.sparkContext.defaultParallelism
-    with _store_lock(store_path):
+    with lock(store_path):
         m = read_manifest(store_path)
-        _sweep_unreferenced(store_path, m)
+        _sweep(store_path, m)
         new_gen = m.get("generation", 0) + 1
         new_cg = m.get("common_generation", 0) + 1
         id_col = m["id_col"]
 
-        sh_dst = os.path.join(store_path, f"shingles-g{new_gen}")
-        _link_fold(
+        sh_dst = gen_dir(store_path, "shingles", new_gen)
+        link_fold(
             sh_dst,
-            [_rel_dir(store_path, m, "shingles")]
+            [gen_dir(store_path, "shingles", m.get("generation", 0))]
             + [
                 os.path.join(store_path, "batches", b, "shingles")
                 for b in m.get("applied_batches", [])
@@ -791,12 +542,9 @@ def refreeze_common(spark: SparkSession, store_path: str) -> dict:
                 .where(F.col("c") > F.lit(m["max_df"]) * F.lit(n_docs))
                 .select("h")
             )
-            common.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(store_path, f"common-g{new_cg}")
-            )
-            common = spark.read.parquet(
-                os.path.join(store_path, f"common-g{new_cg}")
-            )
+            common_dst = gen_dir(store_path, "common", new_cg)
+            common.coalesce(1).write.mode("overwrite").parquet(common_dst)
+            common = spark.read.parquet(common_dst)
 
             banded = _sign_and_band(
                 hashed, common, m["num_perms"], m["bands"], id_col
@@ -804,60 +552,22 @@ def refreeze_common(spark: SparkSession, store_path: str) -> dict:
             banded.repartition(
                 parallelism, "band_idx", "band_key"
             ).write.mode("overwrite").parquet(
-                os.path.join(store_path, f"banded-g{new_gen}")
+                gen_dir(store_path, "banded", new_gen)
             )
         finally:
             hashed.unpersist()
 
-        folded = list(m.get("applied_batches", []))
-        m["generation"] = new_gen
-        m["common_generation"] = new_cg
-        m["applied_batches"] = []
-        m["compacted_batches"] = (
-            m.get("compacted_batches", []) + folded
-        )
+        fold(m, new_gen, common_generation=new_cg)
         m["n_docs"] = int(n_docs)
         m["tot_hashes"] = int(tot_hashes)
         m["n_appended"] = 0
-        _write_manifest(store_path, m)
+        write_manifest(store_path, m)
     return m
 
 
 # -- registry -----------------------------------------------------------------
 
 from .dedup import _duck_mh_sigs, _X73_CUT  # noqa: E402
-
-
-def _part_files(sf_dir: str, table: str) -> list[str]:
-    """Sorted parquet part files of ``table`` (recursive -- partitioned
-    layouts keep part files in subdirectories).  Raises on an empty set."""
-    import glob
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    parts = (
-        sorted(
-            glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
-        )
-        if os.path.isdir(src)
-        else [src]
-    )
-    if not parts:
-        raise ValueError(f"no parquet files under {src}")
-    return parts
-
-
-def _corpus_fingerprint(sf_dir: str, table: str = "documents") -> str:
-    """Content fingerprint of ``table``'s parquet source: every file
-    with its size and mtime.  Raises on an empty file set rather than
-    degenerating to a fingerprint that can't detect regeneration.
-    (The ANN store fingerprints ``embeddings`` through the same code.)"""
-    import hashlib
-
-    stats = []
-    for p in _part_files(sf_dir, table):
-        st = os.stat(p)
-        stats.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(stats).encode()).hexdigest()[:16]
 
 
 #: Above this many part files, a serial driver-side footer walk stops
@@ -875,7 +585,7 @@ def footer_row_count(spark: SparkSession, sf_dir: str, table: str) -> int:
     ``_FOOTER_COUNT_MAX_FILES`` part files (the 100 TB layout) it falls
     back to the distributed count rather than serializing a huge file
     walk on the driver."""
-    parts = _part_files(sf_dir, table)
+    parts = part_files(os.path.join(sf_dir, f"{table}.parquet"))
     if len(parts) > _FOOTER_COUNT_MAX_FILES:
         from ..queries import t
 
@@ -885,62 +595,21 @@ def footer_row_count(spark: SparkSession, sf_dir: str, table: str) -> int:
     return sum(pq.read_metadata(p).num_rows for p in parts)
 
 
-#: Stale sibling stores (older corpus fingerprints of the same config)
-#: are pruned only past this age: an in-flight mine against the old
-#: corpus must not have its parquet yanked mid-scan by a rebuild.
-_STALE_STORE_GRACE_NS = 3600 * 1_000_000_000
-
-
-def _store_path(
-    spark: SparkSession,
-    sf_dir: str,
-    n_docs: int,
-    cut: int,
-    fp: str,
-    variant: str = "",
+def _cached_store(
+    sf_dir: str, n_docs: int, cut: int, build, ready=None, variant: str = ""
 ) -> str:
-    """Cache path for the registry's corpus store: CONTENT-ADDRESSED --
-    the corpus fingerprint is part of the directory name, so regenerated
-    testdata builds into a NEW directory instead of rebuilding in place
-    under a concurrent reader mid-mine (a reader's store is immutable
-    for its lifetime).  Superseded fingerprints of the same config are
-    pruned after :data:`_STALE_STORE_GRACE_NS` by :func:`_prune_stale_stores`.
-    ``variant`` separates entries that share (sf_dir, n, cut) but drive
-    the store through different lifecycles (x78 compacts where x80
-    refreezes -- same base cut, incompatible end states)."""
-    import hashlib
-
-    key = hashlib.md5(
-        f"{sf_dir}|{n_docs}|{cut}|v{STORE_VERSION}{variant}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/conecta_spark_sigstore", key, fp)
-
-
-def _prune_stale_stores(path: str) -> None:
-    """Remove sibling fingerprint dirs of ``path`` untouched for longer
-    than the grace period -- retention for the content-addressed cache
-    (without it every testdata regeneration would orphan a store
-    forever).  Age is judged on the dir mtime; a store being BUILT right
-    now is fresh and skipped, and one hour bounds any plausible
-    in-flight mine against a superseded corpus."""
-    import shutil
-    import time
-
-    parent = os.path.dirname(path)
-    now_ns = time.time_ns()
-    try:
-        siblings = os.listdir(parent)
-    except OSError:
-        return
-    for name in siblings:
-        sib = os.path.join(parent, name)
-        if sib == path or not os.path.isdir(sib):
-            continue
-        try:
-            if now_ns - os.stat(sib).st_mtime_ns > _STALE_STORE_GRACE_NS:
-                shutil.rmtree(sib, ignore_errors=True)
-        except OSError:
-            continue
+    """The registry's corpus store under the content-addressed cache
+    (:func:`.store.build_once`), keyed on (sf_dir, n, cut).  ``variant``
+    separates entries that share those but drive the store through
+    different lifecycles (x78 compacts where x80 refreezes -- same base
+    cut, incompatible end states)."""
+    return build_once(
+        "/tmp/conecta_spark_sigstore",
+        f"{sf_dir}|{n_docs}|{cut}|v{VERSION}{variant}",
+        os.path.join(sf_dir, "documents.parquet"),
+        build,
+        ready,
+    )
 
 
 @register(
@@ -969,33 +638,14 @@ def x77_stored_incremental(spark, sf_dir) -> DataFrame:
     id_col = "doc_id"
     corpus = docs.where(F.col(id_col) < cut)
     new = docs.where(F.col(id_col) >= cut)
-    fp = _corpus_fingerprint(sf_dir)
-    path = _store_path(spark, sf_dir, n, cut, fp)
-
-    def _current() -> bool:
-        try:
-            return read_manifest(path).get("corpus_fingerprint") == fp
-        except (OSError, ValueError):
-            return False
-
-    if not _current():  # absent or half-built: build (the path is
-        # content-addressed, so "stale" cannot happen -- a regenerated
-        # corpus lands in a fresh directory and never overwrites a store
-        # a concurrent reader is mid-mining)
-        # flock serializes concurrent sessions on the shared cache path
-        # (bench alongside pytest): the loser of the race re-checks
-        # under the lock and adopts the winner's store instead of
-        # racing mode("overwrite") writes into the same directory
-        import fcntl
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, ".build.lock"), "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            if not _current():
-                write_signature_store(
-                    corpus, path, manifest_extra={"corpus_fingerprint": fp}
-                )
-        _prune_stale_stores(path)
+    path = _cached_store(
+        sf_dir,
+        n,
+        cut,
+        lambda path, extra: write_signature_store(
+            corpus, path, manifest_extra=extra
+        ),
+    )
     # validate_ids=False: store base and batch are two disjoint id
     # slices of ONE keyed table (doc_id < cut vs >= cut), so overlap
     # is impossible by construction -- the guard's documented escape
@@ -1044,33 +694,20 @@ def x78_compacted_store(spark, sf_dir) -> DataFrame:
         (F.col(id_col) >= base_cut) & (F.col(id_col) < new_cut)
     )
     day2 = docs.where(F.col(id_col) >= new_cut)
-    fp = _corpus_fingerprint(sf_dir)
-    path = _store_path(spark, sf_dir, n, base_cut, fp)
 
-    def _ready() -> bool:
-        try:
-            mm = read_manifest(path)
-            return (
-                mm.get("corpus_fingerprint") == fp
-                and mm.get("generation", 0) >= 1
-                and not mm.get("applied_batches")
-            )
-        except (OSError, ValueError):
-            return False
+    def build(path: str, extra: dict) -> None:
+        write_signature_store(base, path, manifest_extra=extra)
+        append_batch(spark, path, day1, batch_id="day-001")
+        compact_store(spark, path)
 
-    if not _ready():
-        import fcntl
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, ".build.lock"), "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            if not _ready():
-                write_signature_store(
-                    base, path, manifest_extra={"corpus_fingerprint": fp}
-                )
-                append_batch(spark, path, day1, batch_id="day-001")
-                compact_store(spark, path)
-        _prune_stale_stores(path)
+    path = _cached_store(
+        sf_dir,
+        n,
+        base_cut,
+        build,
+        lambda m: m.get("generation", 0) >= 1
+        and not m.get("applied_batches"),
+    )
     # validate_ids=False: same disjoint-slice construction as x77
     return incremental_pairs_stored(
         spark, path, day2, threshold=0.5, validate_ids=False
@@ -1108,33 +745,21 @@ def x80_refrozen_store(spark, sf_dir) -> DataFrame:
         (F.col(id_col) >= base_cut) & (F.col(id_col) < new_cut)
     )
     day2 = docs.where(F.col(id_col) >= new_cut)
-    fp = _corpus_fingerprint(sf_dir)
-    path = _store_path(spark, sf_dir, n, base_cut, fp, variant="|refreeze")
 
-    def _ready() -> bool:
-        try:
-            mm = read_manifest(path)
-            return (
-                mm.get("corpus_fingerprint") == fp
-                and mm.get("common_generation", 0) >= 1
-                and mm.get("n_appended") == 0
-            )
-        except (OSError, ValueError):
-            return False
+    def build(path: str, extra: dict) -> None:
+        write_signature_store(base, path, manifest_extra=extra)
+        append_batch(spark, path, day1, batch_id="day-001")
+        refreeze_common(spark, path)
 
-    if not _ready():
-        import fcntl
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, ".build.lock"), "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            if not _ready():
-                write_signature_store(
-                    base, path, manifest_extra={"corpus_fingerprint": fp}
-                )
-                append_batch(spark, path, day1, batch_id="day-001")
-                refreeze_common(spark, path)
-        _prune_stale_stores(path)
+    path = _cached_store(
+        sf_dir,
+        n,
+        base_cut,
+        build,
+        lambda m: m.get("common_generation", 0) >= 1
+        and m.get("n_appended") == 0,
+        variant="|refreeze",
+    )
     # validate_ids=False: same disjoint-slice construction as x77
     return incremental_pairs_stored(
         spark, path, day2, threshold=0.5, validate_ids=False

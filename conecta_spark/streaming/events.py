@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.store import source_fingerprint
 from ..queries import dsum, epoch_micros, register, t, DSUM
 
 SESSION_GAP_US = 1_800_000_000  # 30 min in microseconds
@@ -440,7 +441,7 @@ def x65_streaming_hourly(spark, sf_dir) -> DataFrame:
     # (hour window, event_type) group -- exactly the batch twin's output
     # cardinality, probed once per corpus version and cached.
     src = os.path.join(sf_dir, "events.parquet")
-    probe_key = ("x65", src, _source_fingerprint(src))
+    probe_key = ("x65", src, source_fingerprint(src))
     n_state = _STATE_PROBE_CACHE.get(probe_key)
     if n_state is None:
         n_state = hourly_rollup(t(spark, sf_dir, "events")).count()
@@ -540,7 +541,7 @@ def x72_streaming_session_window(spark, sf_dir) -> DataFrame:
     # state is one row per session; the batch twin's output cardinality
     # is exactly that, probed once per corpus version and cached.
     src = os.path.join(sf_dir, "events.parquet")
-    probe_key = ("x72", src, _source_fingerprint(src))
+    probe_key = ("x72", src, source_fingerprint(src))
     n_state = _STATE_PROBE_CACHE.get(probe_key)
     if n_state is None:
         n_state = sessionize_batch(t(spark, sf_dir, "events")).count()
@@ -674,32 +675,6 @@ def _remember_stream_view(spark, shuffle_partitions: int, name: str) -> None:
 _STATE_PROBE_CACHE: dict = {}
 
 
-def _source_fingerprint(src: str) -> str:
-    """Content fingerprint of a parquet source: every part file
-    (recursive) with its size and mtime_ns.  A single os.stat of the
-    top-level path is NOT enough when the source is a Spark-written
-    directory -- the dir's st_size never reflects content and its mtime
-    misses an in-place part rewrite with identical filenames, so a
-    regenerated corpus could reuse a stale cached state-row count and
-    mis-size state partitions.  Same discipline as
-    minhash_store._corpus_fingerprint."""
-    import glob
-    import hashlib
-
-    parts = (
-        sorted(
-            glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
-        )
-        if os.path.isdir(src)
-        else [src]
-    )
-    stats = []
-    for p in parts:
-        st = os.stat(p)
-        stats.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(stats).encode()).hexdigest()[:16]
-
-
 #: On-disk schema per (source, content fingerprint): the registry/bench
 #: invoke each streaming entry repeatedly, and every invocation paid a
 #: driver-side footer read (spark.read.parquet(...).schema) just to
@@ -709,7 +684,7 @@ _STREAM_SCHEMA_CACHE: dict = {}
 
 
 def _stream_schema(spark, src_file: str):
-    key = (src_file, _source_fingerprint(src_file))
+    key = (src_file, source_fingerprint(src_file))
     schema = _STREAM_SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(src_file).schema
@@ -751,7 +726,7 @@ def x76_streaming_interval_join(spark, sf_dir) -> DataFrame:
     # lives in a child session so concurrent queries in the parent never
     # inherit it.
     src = os.path.join(sf_dir, "events.parquet")
-    probe_key = (src, _source_fingerprint(src))
+    probe_key = (src, source_fingerprint(src))
     n_state = _STATE_PROBE_CACHE.get(probe_key)
     if n_state is None:
         n_state = (
@@ -913,7 +888,7 @@ def x71_streaming_dedup(spark, sf_dir) -> DataFrame:
     # the document count -- which the parquet footer answers driver-side
     # with no job at all (the footer_row_count discipline).
     src = os.path.join(sf_dir, "documents.parquet")
-    probe_key = ("x71", src, _source_fingerprint(src))
+    probe_key = ("x71", src, source_fingerprint(src))
     n_state = _STATE_PROBE_CACHE.get(probe_key)
     if n_state is None:
         from ..operators.minhash_store import footer_row_count

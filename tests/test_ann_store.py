@@ -155,7 +155,7 @@ def test_replay_guards_survive_compaction(spark, corpus, batch, tmp_path):
     """append is idempotent by batch_id, including after a compaction
     moved the id to compacted_batches and the dir aged out -- the same
     exactly-once matrix as the signature store."""
-    from conecta_spark.operators import ann_store as mod
+    from conecta_spark.operators import store
     from conecta_spark.operators.ann_store import (
         _assigned_relation,
         append_ann_batch,
@@ -178,12 +178,12 @@ def test_replay_guards_survive_compaction(spark, corpus, batch, tmp_path):
     assert os.path.isdir(os.path.join(path, "assigned"))
     assert os.path.isdir(os.path.join(path, "batches", "day-001"))
     # age them out, sweep-only pass removes them
-    orig = mod._ANN_SWEEP_GRACE_NS
-    mod._ANN_SWEEP_GRACE_NS = 0
+    orig = store.GRACE_NS
+    store.GRACE_NS = 0
     try:
         compact_ann_store(spark, path)
     finally:
-        mod._ANN_SWEEP_GRACE_NS = orig
+        store.GRACE_NS = orig
     assert not os.path.exists(os.path.join(path, "assigned"))
     assert not os.path.exists(os.path.join(path, "batches", "day-001"))
     # replay of the folded id: still a no-op
@@ -264,7 +264,7 @@ def test_recluster_keeps_old_routing_for_grace(spark, corpus, batch, tmp_path):
     and OLD assignment generation must survive the commit (a reader
     holding the pre-recluster manifest keeps routing old centroids
     against the old cells), aging out only past the grace window."""
-    from conecta_spark.operators import ann_store as mod
+    from conecta_spark.operators import store
     from conecta_spark.operators.ann_store import (
         append_ann_batch,
         compact_ann_store,
@@ -280,12 +280,12 @@ def test_recluster_keeps_old_routing_for_grace(spark, corpus, batch, tmp_path):
     assert os.path.isfile(os.path.join(path, "centroids-g1.json"))
     assert os.path.isdir(os.path.join(path, "assigned"))
     assert os.path.isdir(os.path.join(path, "assigned-g1"))
-    orig = mod._ANN_SWEEP_GRACE_NS
-    mod._ANN_SWEEP_GRACE_NS = 0
+    orig = store.GRACE_NS
+    store.GRACE_NS = 0
     try:
         compact_ann_store(spark, path)  # sweep-only pass
     finally:
-        mod._ANN_SWEEP_GRACE_NS = orig
+        store.GRACE_NS = orig
     assert not os.path.exists(os.path.join(path, "centroids.json"))
     assert os.path.isfile(os.path.join(path, "centroids-g1.json"))
     assert not os.path.exists(os.path.join(path, "assigned"))
@@ -372,7 +372,7 @@ def test_stream_ingestion_matches_batch_loop(spark, corpus, tmp_path):
         stream_assign_and_append,
         write_ann_store,
     )
-    from conecta_spark.operators.minhash_store import stream_batch_id
+    from conecta_spark.operators.store import stream_batch_id
     from conecta_spark.operators.simsearch import IVFIndex
 
     path_stream = str(tmp_path / "ann_stream")
@@ -461,3 +461,89 @@ def test_half_built_store_reads_as_absent(spark, corpus, tmp_path):
     os.remove(os.path.join(path, ANN_MANIFEST))
     with pytest.raises(FileNotFoundError):
         read_ann_manifest(path)
+
+
+def test_concurrent_appends_both_commit(spark, corpus, tmp_path):
+    """Two appends racing on one ANN store must BOTH land in
+    applied_batches: the manifest commit is a read-modify-write, and
+    the store flock is what keeps the last writer from dropping the
+    other's committed batch."""
+    import threading
+
+    from conecta_spark.operators.ann_store import (
+        append_ann_batch,
+        read_ann_manifest,
+        write_ann_store,
+    )
+
+    path = str(tmp_path / "ann")
+    write_ann_store(corpus, path, n_clusters=8)
+    batches = {
+        "day-a": _vecs(spark, range(300, 305)),
+        "day-b": _vecs(spark, range(310, 315)),
+    }
+    errors = []
+
+    def _run(bid):
+        try:
+            append_ann_batch(spark, path, batches[bid], batch_id=bid)
+        except Exception as e:  # surfaced below; a swallowed raise
+            errors.append(e)  # would vacuously pass the assert
+
+    threads = [
+        threading.Thread(target=_run, args=(b,)) for b in batches
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=600)
+        assert not th.is_alive()
+    assert not errors
+    m = read_ann_manifest(path)
+    assert sorted(m["applied_batches"]) == ["day-a", "day-b"]
+    assert m["n_appended"] == 10
+
+
+def test_sweep_removes_aged_crash_leftovers(spark, corpus, tmp_path):
+    """Crash leftovers of the ANN layout -- a ``batches/.tmp-<uuid>/``
+    staging dir, a ``.manifest.json.tmp-*`` and a ``.centroids*.tmp``
+    write -- are removed by a sweep-only compaction once past the grace
+    window; a staging dir whose inner file is fresh is kept."""
+    import time
+
+    from conecta_spark.operators import store
+    from conecta_spark.operators.ann_store import (
+        compact_ann_store,
+        write_ann_store,
+    )
+
+    path = tmp_path / "ann"
+    write_ann_store(corpus, str(path), n_clusters=8)
+    aged = path / "batches" / ".tmp-aged00000001" / "assigned"
+    live = path / "batches" / ".tmp-live00000001" / "assigned"
+    for d in (aged, live):
+        d.mkdir(parents=True)
+        (d / "part-00000.parquet").write_bytes(b"x")
+    manifest_tmp = path / ".manifest.json.tmp-aged0001"
+    centroids_tmp = path / ".centroids-g1.tmp"
+    manifest_tmp.write_text("{")
+    centroids_tmp.write_text("[")
+    old = time.time_ns() - store.GRACE_NS - 10**9
+    for p in (
+        aged / "part-00000.parquet",
+        aged,
+        aged.parent,
+        live,
+        live.parent,
+        manifest_tmp,
+        centroids_tmp,
+    ):
+        os.utime(p, ns=(old, old))
+
+    compact_ann_store(spark, str(path))
+    assert not aged.parent.exists()
+    assert not manifest_tmp.exists()
+    assert not centroids_tmp.exists()
+    assert (live / "part-00000.parquet").exists()
+    assert (path / "assigned").is_dir()  # the live store is untouched
+    assert (path / "centroids.json").is_file()

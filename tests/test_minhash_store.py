@@ -173,8 +173,8 @@ def test_append_batch_is_idempotent_by_batch_id(spark, corpus, batch, tmp_path):
     no duplicated rows for the verify join), and a batch dir that exists
     WITHOUT a manifest entry (crash between rename and commit) must be
     invisible to readers until a retry adopts and commits it."""
+    from conecta_spark.operators.store import relation as _store_relation
     from conecta_spark.operators.minhash_store import (
-        _store_relation,
         append_batch,
         read_manifest,
         write_signature_store,
@@ -256,9 +256,9 @@ def test_prune_stale_stores_respects_grace(tmp_path):
     import os
     import time
 
-    from conecta_spark.operators.minhash_store import (
-        _STALE_STORE_GRACE_NS,
-        _prune_stale_stores,
+    from conecta_spark.operators.store import (
+        GRACE_NS as _STALE_STORE_GRACE_NS,
+        prune_stale_stores as _prune_stale_stores,
     )
 
     root = tmp_path / "cfgkey"
@@ -283,7 +283,7 @@ def test_compaction_preserves_pairs(spark, corpus, batch, tmp_path):
     at commit time (readers take no lock and may be mid-scan on the old
     manifest); they age out of a later sweep once past the grace
     window."""
-    from conecta_spark.operators import minhash_store as ms
+    from conecta_spark.operators import store
     from conecta_spark.operators.minhash_store import (
         append_batch,
         compact_store,
@@ -326,12 +326,12 @@ def test_compaction_preserves_pairs(spark, corpus, batch, tmp_path):
     assert after == before and after  # non-vacuous: probe hits both sides
     # sweep-eventually: once the grace window has elapsed, the next
     # compaction (sweep-only here) removes every unreferenced dir
-    orig = ms._SWEEP_GRACE_NS
-    ms._SWEEP_GRACE_NS = 0
+    orig = store.GRACE_NS
+    store.GRACE_NS = 0
     try:
         compact_store(spark, path)
     finally:
-        ms._SWEEP_GRACE_NS = orig
+        store.GRACE_NS = orig
     assert not os.path.exists(os.path.join(path, "shingles"))
     assert not os.path.exists(os.path.join(path, "banded"))
     assert not os.path.exists(os.path.join(path, "batches", "day-001"))
@@ -358,8 +358,8 @@ def test_append_after_compaction(spark, corpus, batch, tmp_path):
     """The lifecycle keeps cycling: an append after a compaction lands
     in the new generation's applied_batches and is served on reads, and
     a SECOND compaction folds it into generation 2."""
+    from conecta_spark.operators.store import relation as _store_relation
     from conecta_spark.operators.minhash_store import (
-        _store_relation,
         append_batch,
         compact_store,
         incremental_pairs_stored,
@@ -489,8 +489,8 @@ def test_append_racing_compaction_commits_safely(spark, corpus, batch, tmp_path)
     batch1 + batch2 exactly once each."""
     import threading
 
+    from conecta_spark.operators.store import relation as _store_relation
     from conecta_spark.operators.minhash_store import (
-        _store_relation,
         append_batch,
         compact_store,
         read_manifest,
@@ -572,9 +572,9 @@ def test_replayed_batch_after_compaction_is_noop(
     heal-retry or replayed streaming epoch with the same id must be a
     no-op -- re-appending would duplicate its docs in the store and
     double-count n_appended."""
-    from conecta_spark.operators import minhash_store as ms
+    from conecta_spark.operators import store
+    from conecta_spark.operators.store import relation as _store_relation
     from conecta_spark.operators.minhash_store import (
-        _store_relation,
         append_batch,
         compact_store,
         write_signature_store,
@@ -586,12 +586,12 @@ def test_replayed_batch_after_compaction_is_noop(
     m1 = compact_store(spark, path)
     assert "day-001" in m1["compacted_batches"]
     # age the folded dir out so the replay can't shortcut on dir presence
-    orig = ms._SWEEP_GRACE_NS
-    ms._SWEEP_GRACE_NS = 0
+    orig = store.GRACE_NS
+    store.GRACE_NS = 0
     try:
         compact_store(spark, path)
     finally:
-        ms._SWEEP_GRACE_NS = orig
+        store.GRACE_NS = orig
     assert not os.path.exists(os.path.join(path, "batches", "day-001"))
     m2 = append_batch(spark, path, batch, batch_id="day-001")
     assert m2["applied_batches"] == []
@@ -770,3 +770,45 @@ def test_footer_row_count_equals_spark_count(spark, sf_dir, tmp_path):
         "id AS doc_id", "CAST(id AS STRING) AS text"
     ).write.parquet(str(multi))
     assert footer_row_count(spark, str(tmp_path / "multi"), "docs") == 1234
+
+
+def test_sweep_removes_aged_crash_leftovers(spark, corpus, tmp_path):
+    """A crashed append leaves ``batches/.tmp-<uuid>/`` and a crashed
+    manifest write leaves ``.manifest.json.tmp-*``; nothing else ever
+    removes them.  A sweep-only compaction with the default grace must
+    remove a leftover whose newest mtime is past the grace window and
+    keep a staging dir whose inner file is fresh (an append still
+    writing)."""
+    import time
+
+    from conecta_spark.operators import store
+    from conecta_spark.operators.minhash_store import (
+        compact_store,
+        write_signature_store,
+    )
+
+    path = tmp_path / "store"
+    write_signature_store(corpus, str(path))
+    aged = path / "batches" / ".tmp-aged00000001" / "shingles"
+    live = path / "batches" / ".tmp-live00000001" / "shingles"
+    for d in (aged, live):
+        d.mkdir(parents=True)
+        (d / "part-00000.parquet").write_bytes(b"x")
+    manifest_tmp = path / ".manifest.json.tmp-aged0001"
+    manifest_tmp.write_text("{")
+    old = time.time_ns() - store.GRACE_NS - 10**9
+    for p in (
+        aged / "part-00000.parquet",
+        aged,
+        aged.parent,
+        live,
+        live.parent,
+        manifest_tmp,
+    ):
+        os.utime(p, ns=(old, old))
+
+    compact_store(spark, str(path))
+    assert not aged.parent.exists()
+    assert not manifest_tmp.exists()
+    assert (live / "part-00000.parquet").exists()
+    assert (path / "shingles").is_dir()  # the live store is untouched

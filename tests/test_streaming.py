@@ -681,12 +681,13 @@ def test_stream_schema_cache_hits_and_invalidates(spark, tmp_path):
     fingerprint changes (r12 optimization)."""
     import os
 
+    from conecta_spark.operators.store import source_fingerprint
     from conecta_spark.streaming import events as ev
 
     src = str(tmp_path / "schema_cache.parquet")
     spark.createDataFrame([(1,)], "a long").coalesce(1).write.parquet(src)
     s1 = ev._stream_schema(spark, src)
-    key = (src, ev._source_fingerprint(src))
+    key = (src, source_fingerprint(src))
     sentinel = object()
     ev._STREAM_SCHEMA_CACHE[key] = sentinel
     # same content -> cache hit, the sentinel proves no re-read happened
@@ -777,10 +778,13 @@ def test_source_fingerprint_sees_part_rewrite(spark, tmp_path):
     """An in-place part rewrite with identical filenames must change the
     source fingerprint: the x76 state probe sized state partitions from
     one os.stat of the top-level dir, which misses exactly that (r10
-    advice)."""
+    advice).  A directory with no parquet files raises instead of
+    fingerprinting as the md5 of nothing."""
     import os
 
-    from conecta_spark.streaming.events import _source_fingerprint
+    from conecta_spark.operators.store import (
+        source_fingerprint as _source_fingerprint,
+    )
 
     src = str(tmp_path / "events.parquet")
     spark.createDataFrame([(1,)], "a long").coalesce(1).write.parquet(src)
@@ -790,3 +794,8 @@ def test_source_fingerprint_sees_part_rewrite(spark, tmp_path):
     )
     os.utime(os.path.join(src, part), ns=(1, 1))  # same name, same size
     assert _source_fingerprint(src) != fp1
+
+    empty = tmp_path / "empty.parquet"
+    empty.mkdir()
+    with pytest.raises(ValueError, match="no parquet files"):
+        _source_fingerprint(str(empty))
