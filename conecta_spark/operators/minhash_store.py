@@ -65,8 +65,6 @@ from .dedup import (
     VERIFY_BROADCAST_MAX_BYTES,
     _drop_wide_buckets,
     _estimate_shingle_bytes,
-    _evict_mine_live,
-    _MINE_LIVE,
     _new_driven_pairs,
     auto_band_width,
     band_signatures,
@@ -94,7 +92,13 @@ from .store import (  # noqa: F401 -- MANIFEST, read_manifest, stream_batch_id: 
     write_manifest,
 )
 
+from ..cache import slot
 from ..queries import register, t
+
+#: The slot dedup's miners fill too: one mining pass, inline or against a
+#: store, is cached at a time.
+_MINE = slot("minhash_mining")
+
 
 def _common_dir(path: str, m: dict) -> str:
     """The frozen-DF boilerplate relation: ``common`` at build time,
@@ -230,8 +234,6 @@ def incremental_pairs_stored(
     ``"auto"`` (priced over stored-plus-batch band widths).  Width is
     evaluated over the UNION, so a batch that lands in an already-wide
     stored bucket is capped consistently with a from-scratch mine."""
-    from pyspark import StorageLevel
-
     m = read_manifest(store_path)
     id_col = m["id_col"]
     stored_banded = relation(spark, store_path, m, "banded")
@@ -252,11 +254,10 @@ def incremental_pairs_stored(
                 "disjoint (append_batch after mining keeps them so)"
             )
 
-    _evict_mine_live()
-    hashed_new = hashed_shingles(
-        new_df, m["k"], m["text_col"], id_col
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _MINE_LIVE.append(hashed_new)
+    _MINE.evict()
+    hashed_new = _MINE.hold(
+        hashed_shingles(new_df, m["k"], m["text_col"], id_col)
+    )
     new_stats = hashed_new.agg(
         F.count(F.lit(1)).alias("n"), F.sum(F.size("sh")).alias("tot")
     ).first()
@@ -272,10 +273,9 @@ def incremental_pairs_stored(
             <= VERIFY_BROADCAST_MAX_BYTES
         )
 
-    banded_new = _sign_and_band(
-        hashed_new, common, m["num_perms"], m["bands"], id_col
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _MINE_LIVE.append(banded_new)
+    banded_new = _MINE.hold(
+        _sign_and_band(hashed_new, common, m["num_perms"], m["bands"], id_col)
+    )
     banded_all = stored_banded.unionByName(banded_new)
     if max_band_width == "auto":
         # price the batch-driven candidate shape (wn*(w-wn) + wn-choose-2

@@ -43,23 +43,21 @@ levenshtein join as the semantic contract.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import slot
 from ..plans.skew import spread
 from ..queries import register, t
 
-#: At most one cached prefix-label relation per session: each
-#: _qgram_candidates call evicts its predecessor's persist (r5 advice --
-#: repeated invocations otherwise accumulate CacheManager entries).
-_LIVE_PREFIX: list = []
+#: _qgram_candidates' persisted prefix-label relation.
+_PREFIX = slot("qgram_candidates")
 
-#: Same one-slot hygiene for the d=1 deletion-neighborhood signature
-#: relation (edit_distance_join persisted it without eviction -- the
-#: exact leak the r5 advice flagged for the prefix relation).  Separate
-#: slot from _LIVE_PREFIX so a d=1 and a d>=2 join in one session don't
-#: thrash each other's cache.
-_LIVE_DEL1: list = []
+#: edit_distance_join's persisted d=1 deletion-neighborhood signatures;
+#: a separate slot from _PREFIX so a d=1 and a d>=2 join in one session
+#: don't thrash each other's cache.
+_DEL1 = slot("edit_distance_join")
 
 
 def _del1_signatures_expr(col: str) -> str:
@@ -114,14 +112,6 @@ def edit_distance_join(
     # broadcast build over the signature relation) on one core -- guide
     # 2.5 input-skew medicine, no-op when the scan is already wide
     df = spread(df)
-    # Evict-first, then persist (the CacheManager dedupes canonically-
-    # equal plans, so evicting after would uncache the new relation too
-    # -- see _qgram_candidates for both measured traps).
-    while _LIVE_DEL1:
-        try:
-            _LIVE_DEL1.pop().unpersist()
-        except Exception:
-            pass
     sigs = df.select(
         F.col(id_col),
         F.explode(
@@ -131,8 +121,9 @@ def edit_distance_join(
         # never reuses exchanges across them -- the x07/x54 lesson), and
         # the deletion-neighborhood transform is an interpreted lambda
         # worth evaluating once.  Skinny relation: (id, signature).
-    ).persist()
-    _LIVE_DEL1.append(sigs)
+    )
+    _DEL1.evict()
+    sigs = _DEL1.hold(sigs, StorageLevel.MEMORY_AND_DISK_DESER)
     if sig_count_cap is not None:
         ok = (
             sigs.groupBy("sig")
@@ -342,22 +333,7 @@ def _qgram_candidates(
     DISTINCT (id_a, id_b) candidate pairs awaiting verification.  Split
     out so scale_bench.py can meter blocking precision (candidates vs
     verified) without a second pipeline."""
-    # Generation-over-generation cache hygiene (the connected_components
-    # pattern, r5 advice): evict the PREVIOUS invocation's prefix
-    # relation so repeated calls in one session hold at most one cached
-    # copy.  Two traps measured while landing this: an eager
-    # localCheckpoint self-releases on GC but materializes the relation
-    # as a row-format RDD and blinds AQE for the self-join (1.7s ->
-    # 4.2s); and evicting AFTER the new persist() silently uncaches the
-    # new relation too -- the CacheManager dedupes canonically-equal
-    # plans, so the old entry IS the new entry (1.7s -> 9.4s, both
-    # join sides replanning the gram pipeline).  Evict first, then
-    # persist.
-    while _LIVE_PREFIX:
-        try:
-            _LIVE_PREFIX.pop().unpersist()
-        except Exception:
-            pass
+    _PREFIX.evict()
     if threshold < 1:
         raise ValueError("threshold must be >= 1")
     # spread: gram labeling (expr O(L^2) lambda or the pandas labeler)
@@ -431,8 +407,8 @@ def _qgram_candidates(
         ).alias("pp"),
         # both self-join sides would replan the gram pipeline (AQE never
         # reuses exchanges across them -- the x07/x53 lesson)
-    ).persist()
-    _LIVE_PREFIX.append(prefix)
+    )
+    prefix = _PREFIX.hold(prefix, StorageLevel.MEMORY_AND_DISK_DESER)
     if sig_count_cap is not None:
         ok = (
             prefix.groupBy("pp")

@@ -46,12 +46,8 @@ def main() -> None:
 
     for rep in range(3):
         spark.catalog.clearCache()
-        D._evict_mine_live()
-        while D._PAIRS_LIVE:
-            try:
-                D._PAIRS_LIVE.pop()[1].unpersist()
-            except Exception:
-                pass
+        D._MINE.evict()
+        D._PAIRS.evict()
         marks = [("start", time.perf_counter())]
 
         docs = t(spark, SF_DIR, "documents")

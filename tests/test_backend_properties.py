@@ -216,21 +216,25 @@ class TestIVFQuantizerContract:
         same DataFrame object (no re-scan)."""
         from conecta_spark.operators import simsearch as ss
 
+        slot = ss._PREP
         a = ss._panel_prep(spark, sf_dir)
+        hits, misses = slot.hits, slot.misses
         assert ss._panel_prep(spark, sf_dir) is a  # hit
+        assert (slot.hits, slot.misses) == (hits + 1, misses)
         assert a.storageLevel.useMemory or a.storageLevel.useDisk
         b = ss._panel_prep(spark, oracle_dir)  # miss -> evict a
+        assert (slot.hits, slot.misses) == (hits + 1, misses + 1)
         assert b is not a
         assert not (a.storageLevel.useMemory or a.storageLevel.useDisk)
-        assert len(ss._ANN_PREP) == 1
+        assert len(slot.held) == 1
         # clearCache staleness: a dropped cache entry must read as a MISS
         # (serving the unpersisted relation would re-scan per consumer)
         spark.catalog.clearCache()
         c = ss._panel_prep(spark, oracle_dir)
+        assert (slot.hits, slot.misses) == (hits + 1, misses + 2)
         assert c is not b
         assert c.storageLevel.useMemory or c.storageLevel.useDisk
-        c.unpersist()
-        ss._ANN_PREP.clear()
+        slot.evict()
 
     def test_panel_prep_width_tracks_row_count(self, spark, sf_dir):
         """r12: the prep cache's partition count is derived from the
@@ -253,8 +257,7 @@ class TestIVFQuantizerContract:
             if spark.sparkContext.defaultParallelism > 1:
                 assert expect < spark.sparkContext.defaultParallelism
         finally:
-            prep.unpersist()
-            ss._ANN_PREP.clear()
+            ss._PREP.evict()
 
     def test_shared_pairs_cache_contract(self, spark, sf_dir):
         """shared_minhash_pairs: hit returns the same persisted DataFrame,
@@ -263,9 +266,12 @@ class TestIVFQuantizerContract:
         from conecta_spark.operators import dedup as dd
         from conecta_spark.queries import t
 
-        dd._PAIRS_LIVE.clear()
+        slot = dd._PAIRS
+        slot.evict()
         a = dd.shared_minhash_pairs(spark, sf_dir, threshold=0.5)
+        hits, misses = slot.hits, slot.misses
         assert dd.shared_minhash_pairs(spark, sf_dir, threshold=0.5) is a
+        assert (slot.hits, slot.misses) == (hits + 1, misses)
         assert a.storageLevel.useMemory or a.storageLevel.useDisk
         direct = dd.minhash_lsh_pairs(
             t(spark, sf_dir, "documents"), threshold=0.5
@@ -274,51 +280,50 @@ class TestIVFQuantizerContract:
             map(tuple, direct.collect())
         )
         b = dd.shared_minhash_pairs(spark, sf_dir, limit=100, threshold=0.5)
+        assert (slot.hits, slot.misses) == (hits + 1, misses + 1)
         assert b is not a
         assert not (a.storageLevel.useMemory or a.storageLevel.useDisk)
-        assert len(dd._PAIRS_LIVE) == 1
+        assert len(slot.held) == 1
         spark.catalog.clearCache()
         c = dd.shared_minhash_pairs(spark, sf_dir, limit=100, threshold=0.5)
+        assert (slot.hits, slot.misses) == (hits + 1, misses + 2)
         assert c is not b  # stale entry re-mined, not served unpersisted
         assert c.storageLevel.useMemory or c.storageLevel.useDisk
-        c.unpersist()
-        dd._PAIRS_LIVE.clear()
+        slot.evict()
 
     def test_shared_pairs_materialized_at_creation(self, spark, sf_dir):
         """The slot's relation must be EAGERLY materialized inside
         shared_minhash_pairs: a later key-switch eviction then only drops
         cached data (recomputable), never strands a persisted-but-never-
-        computed lineage whose mining internals (_MINE_LIVE) the next call
+        computed lineage whose mining internals (_MINE) the next call
         evicts too -- the silent band-self-join recompute the r8 advice
         flagged.  Cached partitions must exist BEFORE any caller action."""
         from conecta_spark.operators import dedup as dd
 
-        dd._PAIRS_LIVE.clear()
-        a = dd.shared_minhash_pairs(spark, sf_dir, threshold=0.5)
+        dd._PAIRS.evict()
+        dd.shared_minhash_pairs(spark, sf_dir, threshold=0.5)
         infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
         cached = sum(i.numCachedPartitions() for i in infos)
         assert cached > 0, "pairs relation returned unmaterialized"
-        a.unpersist()
-        dd._PAIRS_LIVE.clear()
+        dd._PAIRS.evict()
 
     def test_mining_internal_persists_are_slot_bounded(self, spark, sf_dir):
         """minhash_lsh_pairs' internal persisted relations (hashed
         shingles, banded keys, materialized candidates) must live in the
-        one-slot _MINE_LIVE eviction list: a second mining call unpersists
+        one-slot _MINE cache: a second mining call unpersists
         the first call's internals (the repo-wide cache-leak rule), so a
         long-lived session alternating corpora holds at most one mining
         pass worth of cache."""
         from conecta_spark.operators import dedup as dd
         from conecta_spark.queries import t
 
-        dd._PAIRS_LIVE.clear()
-        while dd._MINE_LIVE:
-            dd._MINE_LIVE.pop().unpersist()
+        dd._PAIRS.evict()
+        dd._MINE.evict()
         first = dd.minhash_lsh_pairs(
             t(spark, sf_dir, "documents"), threshold=0.5
         )
         first.count()  # materialize: internals now cached
-        old = list(dd._MINE_LIVE)
+        old = dd._MINE.held
         assert len(old) == 3
         assert all(
             r.storageLevel.useMemory or r.storageLevel.useDisk for r in old
@@ -328,13 +333,12 @@ class TestIVFQuantizerContract:
             threshold=0.5,
         )
         second.count()
-        assert len(dd._MINE_LIVE) == 3  # slot holds ONE pass, not two
+        assert len(dd._MINE.held) == 3  # slot holds ONE pass, not two
         assert all(
             not (r.storageLevel.useMemory or r.storageLevel.useDisk)
             for r in old
         ), "previous invocation's internals must be unpersisted"
-        while dd._MINE_LIVE:
-            dd._MINE_LIVE.pop().unpersist()
+        dd._MINE.evict()
 
     def test_index_assignment_matches_exact_argmin(self, spark):
         """The distributed mapInPandas assignment must equal the exact
@@ -439,3 +443,35 @@ def test_backend_auto_probe_is_cached_per_plan(spark):
     out2 = q.with_gopher_signals(df)
     assert "ArrowEvalPython" in out2._jdf.queryExecution().toString()
     q._PROBE_CACHE.clear()
+
+
+@pytest.mark.parametrize(
+    "op", ["ngram_jaccard_pairs", "minhash_lsh_ml", "semantic_dedup"]
+)
+def test_repeated_calls_hold_one_cached_relation(spark, sf_dir, op):
+    """An operator whose persisted intermediate outlives its call (the
+    returned lazy plan reads it) keeps at most one such relation cached:
+    a second call on another slice evicts the first call's, so the
+    number of RDDs with cached partitions does not grow per call."""
+    from conecta_spark.operators import dedup as dd
+    from conecta_spark.operators import simsearch as ss
+    from conecta_spark.queries import t
+
+    fn, table, id_col = {
+        "ngram_jaccard_pairs": (dd.ngram_jaccard_pairs, "documents", "doc_id"),
+        "minhash_lsh_ml": (dd.minhash_lsh_ml, "documents", "doc_id"),
+        "semantic_dedup": (ss.semantic_dedup, "embeddings", "vec_id"),
+    }[op]
+
+    def cached_rdds():
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return sum(1 for i in infos if i.numCachedPartitions() > 0)
+
+    spark.catalog.clearCache()
+    counts = []
+    for limit in (100, 150):
+        fn(t(spark, sf_dir, table).where(f"{id_col} < {limit}")).count()
+        counts.append(cached_rdds())
+    assert counts[0] >= 1, "the operator persisted nothing"
+    assert counts[1] <= counts[0], f"cached relations grew: {counts}"
+    spark.catalog.clearCache()
